@@ -15,11 +15,12 @@ pipeline over tables of multi-turn conversation transcripts:
 
 Design notes
 ------------
-* DataFrame/SQL first: every relational step (joins, majority vote,
-  re-numbering, pair generation, logit aggregation) is expressed with
-  built-in pyspark.sql functions so Catalyst handles pushdown, broadcast
-  selection and AQE. Python only runs inside vectorized Arrow UDF kernels
-  (tokenize/window/decode/encode/classify) — never per row.
+* DataFrame/SQL first: every relational step (joins, re-numbering, pair
+  generation, logit aggregation) is expressed with built-in pyspark.sql
+  functions so Catalyst handles pushdown, broadcast selection and AQE.
+  Python only runs inside vectorized Arrow kernels
+  (tokenize/window/decode/encode/vote/classify) — never per row; the
+  majority vote is a grouped pandas kernel over conv_id hash buckets.
 * Model adapters are pluggable; the default "stub" adapters are pure
   deterministic functions (bionext_spark.kernels) shared verbatim with the
   pure-Python oracle (bionext_spark.oracle) so engine output is

@@ -73,7 +73,8 @@ class PipelineConfig:
     similarity_threshold: float = 0.9
     # Candidate-pair generation: the reference has no cap at inference;
     # at 10^12-turn scale an O(n^2) blow-up on entity-rich conversations
-    # must be bounded. Capped pairs are counted in stage metrics.
+    # must be bounded: each conversation keeps at most this many pairs,
+    # the first ones in (type, id) order.
     max_pairs_per_conversation: int = 10_000
     # Entity pre-cap applied BEFORE the pair self-join so pairs past the cap
     # are never generated: the O(n²) intermediate is bounded at m(m-1)/2
@@ -91,8 +92,6 @@ class PipelineConfig:
     # the window-parallel path so one giant conversation never pins a task.
     # <= 0 disables fusion entirely (always window-parallel).
     fused_tagger_max_turns: int = 10_000
-    # Storage layout.
-    bucket_count: int = 32
     # Arrow batch size for UDF kernels (reference batches 8/128 on GPU;
     # CPU stubs take larger batches).
     kernel_batch_size: int = 1024

@@ -6,8 +6,8 @@ Re-expresses the reference's seven sequential linker passes
 * J1/J2 dictionary hops → **broadcast hash joins** against lexicon tables
   (the lexicons are side data, MBs — never shuffled).
 * O3 cascade ("first non-empty lookup wins", chemicals.py:96-111) →
-  union of per-hop candidate sets tagged with a priority, keep each
-  mention's minimum-priority hop (a window min, no extra shuffle since the
+  union of per-hop candidate sets tagged with a priority; the vote kernel
+  keeps each mention's minimum-priority hop (no extra shuffle, since the
   vote groups by the same key).
 * O4 distinct-encode-join (replaces the reference's lru_cache,
   chemicals.py:71): only *distinct unmatched lowercased texts* ever reach
@@ -19,9 +19,10 @@ Re-expresses the reference's seven sequential linker passes
 * J4 nearest-anchor → per-conversation equi-join genes×linked-organisms +
   ``min_by`` on (|Δstart|, org_start) (genes.py:107-130; strict ``<``
   keeps the earliest organism on ties), default '9606'.
-* A1 majority vote → count support per (conv, candidate), pick per
-  mention ``max_by(candidate, (count, -rank))`` — Python ``max`` first-of-
-  max tie-break reproduced via lexicon rank order.
+* A1 majority vote → one grouped pandas kernel over conv_id hash
+  buckets (majority_vote_grouped → vote_conversation): count support per
+  (conv, candidate), each mention takes its max-count candidate — Python
+  ``max`` first-of-max tie-break reproduced via lexicon rank order.
 * P2 cleaner → filter '-' + row_number re-numbering (cleaner.py:5-30).
 """
 
@@ -56,22 +57,15 @@ def _cands(df: DataFrame, cand, rank, priority: int) -> DataFrame:
     )
 
 
-def _first_nonempty_hop(cands: DataFrame) -> DataFrame:
-    """O3 — keep each mention's lowest-priority (cheapest) non-empty hop."""
-    w = F.min("priority").over(Window.partitionBy("conv_id", "mention_id"))
-    return cands.withColumn("min_p", w).filter(F.col("priority") == F.col("min_p")).drop("min_p")
-
-
 def vote_conversation(
     rows: list[tuple[int, str | None, str, int, int]],
     corrections: dict[str, str] | None = None,
 ) -> list[tuple[int, str, int]]:
     """Pure hop-select + majority-vote for ONE conversation's candidate
     rows (mention_id, label, cand, rank, priority) → per-mention
-    (mention_id, linked_id, priority). Shared semantics with the
-    relational majority_vote (reference chemicals.py:96-135):
-    min-priority hop per mention, per-(label, cand) support counts, max
-    count with first-in-list (rank) tie-break."""
+    (mention_id, linked_id, priority), following reference
+    chemicals.py:96-135: min-priority hop per mention, per-(label, cand)
+    support counts, max count with first-in-list (rank) tie-break."""
     from collections import defaultdict
 
     min_p: dict[int, int] = {}
@@ -100,10 +94,11 @@ def majority_vote_grouped(
     corrections: dict[str, str] | None = None,
     per_label: bool = False,
 ) -> DataFrame:
-    """Grouped-kernel form of hop-select + majority_vote: ONE shuffle and
-    a per-conversation pandas pass, instead of the window + counts + join
-    + groupBy chain (~4 shuffles). Outputs are proven equal to the
-    relational form in tests.
+    """A1 — hop-select + majority vote (vote_conversation) in ONE shuffle
+    and a per-conversation pandas pass. ``per_label=True`` votes several
+    entity types in one pass (counts keyed by (label, cand)), equivalent
+    to the reference's separate per-pass votes since every mention has
+    exactly one label. run_linker's output equals oracle.link (tested).
 
     The kernel groups on a conv_id HASH BUCKET, not conv_id itself: per-
     conversation candidate lists are tiny, so per-group Arrow round-trip
@@ -152,31 +147,6 @@ def majority_vote_grouped(
     return bucketed.groupBy("_b").applyInPandas(
         per_bucket, "conv_id string, mention_id int, linked_id string, priority int"
     )
-
-
-def majority_vote(
-    cands: DataFrame,
-    corrections: dict[str, str] | None = None,
-    per_label: bool = False,
-) -> DataFrame:
-    """A1 — per-conversation support counts over candidate lists, each
-    mention takes its max-count candidate, ties → first in list (rank).
-
-    ``per_label=True`` votes several entity types in one pass (counts
-    keyed by (conv, label, cand)), equivalent to the reference's separate
-    per-pass votes since every mention has exactly one label — this halves
-    the engine's shuffle count vs six sequential vote pipelines."""
-    keys = ["conv_id", "label", "cand"] if per_label else ["conv_id", "cand"]
-    counts = cands.groupBy(*keys).agg(F.count("*").alias("cnt"))
-    scored = cands.join(counts, keys)
-    win = scored.groupBy("conv_id", "mention_id").agg(
-        F.max_by("cand", F.struct(F.col("cnt"), (-F.col("rank")).alias("nr"))).alias("linked_id"),
-        F.min("priority").alias("priority"),
-    )
-    if corrections:
-        mapping = F.create_map(*[F.lit(x) for kv in corrections.items() for x in kv])
-        win = win.withColumn("linked_id", F.coalesce(mapping[F.col("linked_id")], F.col("linked_id")))
-    return win
 
 
 # ---------------------------------------------------------------------------
@@ -870,7 +840,6 @@ def run_linker(
     lexicon_variants: DataFrame | None = None,
     encoder: EncoderAdapter | None = None,
     cfg: PipelineConfig = DEFAULT_CONFIG,
-    vote_impl: str = "grouped",
     gene_symbols: DataFrame | None = None,
     litvar=None,
     llm=None,
@@ -878,10 +847,6 @@ def run_linker(
     fewshot_examples: DataFrame | None = None,
 ) -> DataFrame:
     """mentions → LINKS (same rows + linked_id/method; '-' = unlinked).
-
-    ``vote_impl``: 'grouped' (default) fuses hop-selection + majority vote
-    into one per-conversation kernel (1 shuffle); 'relational' keeps the
-    pure window+groupBy form. Both produce identical output (tested).
 
     ``side``: a prebuilt (possibly session-memoized) LinkerSideData; when
     None it is built here from the four lexicon DataFrames — one
@@ -900,11 +865,6 @@ def run_linker(
             spark, train_direct, lexicon_concepts, lexicon_genes, lexicon_variants
         )
     mentions = mentions.cache()  # fans into dict join, anchors, final join
-
-    def _vote(c: DataFrame, corrections=None, per_label: bool = False) -> DataFrame:
-        if vote_impl == "grouped":
-            return majority_vote_grouped(c, corrections, per_label)
-        return majority_vote(_first_nonempty_hop(c), corrections, per_label)
 
     m = mentions.select(
         "conv_id",
@@ -941,7 +901,7 @@ def run_linker(
     )
 
     # --- taxonomy vote first: gene linking anchors on its winners ---
-    tax = _vote(
+    tax = majority_vote_grouped(
         c_dict.filter(F.col("label") == "OrganismTaxon").drop("label"),
         TAXONOMY_ID_CORRECTIONS,
     ).cache()
@@ -1022,19 +982,19 @@ def run_linker(
         .unionByName(c_emb_gene)
     )
     if deep:
-        rest = _vote(combined, per_label=True).cache()
+        rest = majority_vote_grouped(combined, per_label=True).cache()
         c_var = _variant_candidates(
             mentions, c_dict, c_rs, rest, gene_symbols, litvar, llm,
             fewshot_examples=fewshot_examples, encoder=encoder,
             fewshot_k=cfg.fewshot_k, fewshot_threshold=cfg.fewshot_threshold,
         )
-        var_winners = _vote(c_var, per_label=True)
+        var_winners = majority_vote_grouped(c_var, per_label=True)
         all_winners = tax.unionByName(rest).unionByName(var_winners)
     else:
         combined = combined.unionByName(
             c_dict.filter(F.col("label") == "SequenceVariant")
         ).unionByName(c_rs)
-        all_winners = tax.unionByName(_vote(combined, per_label=True))
+        all_winners = tax.unionByName(majority_vote_grouped(combined, per_label=True))
 
     method_map = F.create_map(
         *[F.lit(x) for (lbl, p), name in _METHODS.items() for x in (f"{lbl}\x00{p}", name)]

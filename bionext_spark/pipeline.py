@@ -14,7 +14,6 @@ import json
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from bionext_spark import synth
 from bionext_spark.adapters import (
@@ -61,13 +60,9 @@ def run(
     litvar=None,
     llm=None,
 ) -> PipelineResult:
-    """transcripts → triples + graph, all stages checkpointed.
-
-    Stage boundaries repartition by conv_id bucket so per-conversation
-    stages stay co-located (the `bucket(N, conv_id)` layout from
-    SURVEY.md §1.4)."""
+    """transcripts → triples + graph, all stages checkpointed."""
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(cfg.kernel_batch_size))
-    cat = StageCatalog(spark, checkpoint_dir, bucket_count=cfg.bucket_count)
+    cat = StageCatalog(spark, checkpoint_dir)
     fp = _fingerprint(cfg)
     manifests: dict[str, Manifest] = {}
 
@@ -162,31 +157,3 @@ def run(
 
     return PipelineResult(triples=triples, manifests=manifests)
 
-
-def count_turns(transcripts: DataFrame) -> int:
-    return transcripts.count()
-
-
-def evaluate_triples(got: DataFrame, expected: DataFrame) -> dict[str, float]:
-    """P/R/F1 over exact (conv_id, subj, pred, obj) matches — the contract
-    from FIXTURES.md §6 (reference metric shape:
-    src/extractor/hf_training.py:24-43). Novelty scored separately."""
-    key = ["conv_id", "subj", "pred", "obj"]
-    g = got.select(*key).distinct()
-    e = expected.select(*key).distinct()
-    tp = g.join(e, key).count()
-    n_got, n_exp = g.count(), e.count()
-    p = tp / n_got if n_got else 0.0
-    r = tp / n_exp if n_exp else 0.0
-    f1 = 2 * p * r / (p + r) if (p + r) else 0.0
-    nov_match = (
-        got.select(*key, "novel").join(expected.select(*key, F.col("novel").alias("nov_e")), key)
-        .filter(F.col("novel") == F.col("nov_e"))
-        .count()
-    )
-    return {
-        "precision": p,
-        "recall": r,
-        "f1": f1,
-        "novelty_accuracy": nov_match / tp if tp else 0.0,
-    }

@@ -76,18 +76,6 @@ LINKS = T.StructType(
     ]
 )
 
-# Candidate entity pairs per conversation.
-PAIRS = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("e1_id", T.StringType(), False),
-        T.StructField("e1_type", T.StringType(), False),
-        T.StructField("e2_id", T.StringType(), False),
-        T.StructField("e2_type", T.StringType(), False),
-        T.StructField("marked_text", T.StringType(), False),
-    ]
-)
-
 # Final relation triples.
 TRIPLES = T.StructType(
     [

@@ -97,12 +97,10 @@ class StageCatalog:
         root: str,
         use_iceberg: bool | None = None,
         namespace: str = "bionext",
-        bucket_count: int = 32,
     ):
         self.spark = spark
         self.root = root
         self.namespace = namespace
-        self.bucket_count = bucket_count
         self.catalog = iceberg_catalog_name(spark)
         if use_iceberg is None:
             use_iceberg = iceberg_available(spark) and self.catalog is not None
@@ -160,21 +158,17 @@ class StageCatalog:
         df: DataFrame,
         inputs: list[str],
         config_fingerprint: str = "",
-        partition_by: str | None = None,
     ) -> tuple[DataFrame, Manifest]:
         """Write a stage table + manifest atomically (temp dir → rename on
         parquet; Iceberg's own atomic commit + manifest rename otherwise)."""
         snap = self.snapshot_id(stage, inputs, config_fingerprint)
         if self.use_iceberg:
-            return self._write_iceberg(stage, df, inputs, config_fingerprint, snap, partition_by)
+            return self._write_iceberg(stage, df, inputs, config_fingerprint, snap)
         final_dir = self._stage_dir(stage, snap)
         tmp_dir = final_dir + ".tmp"
         shutil.rmtree(tmp_dir, ignore_errors=True)
-        writer = df.write.mode("overwrite")
         data_dir = os.path.join(tmp_dir, "data")
-        if partition_by:
-            writer = writer.partitionBy(partition_by)
-        writer.parquet(data_dir)
+        df.write.mode("overwrite").parquet(data_dir)
 
         written = self.spark.read.parquet(data_dir)
         # per-partition lineage/metrics (A5 analog: the reference prints
@@ -213,7 +207,6 @@ class StageCatalog:
         inputs: list[str],
         config_fingerprint: str,
         snap: str,
-        partition_by: str | None,
     ) -> tuple[DataFrame, Manifest]:  # pragma: no cover - needs iceberg jar
         """`writeTo(...).createOrReplace()` (atomic in the catalog), then
         the Iceberg snapshot id is captured into the manifest as the
@@ -221,10 +214,7 @@ class StageCatalog:
         tmp-file rename, so a crash between the two leaves a readable
         table but an uncommitted stage — exactly the parquet semantics."""
         ident = self._iceberg_ident(stage, snap)
-        writer = df.writeTo(ident).using("iceberg")
-        if partition_by:
-            writer = writer.partitionedBy(F.bucket(self.bucket_count, partition_by))
-        writer.createOrReplace()
+        df.writeTo(ident).using("iceberg").createOrReplace()
         written = self.spark.read.table(ident)
         ice_snap = self.spark.sql(
             f"SELECT snapshot_id FROM {ident}.snapshots ORDER BY committed_at DESC LIMIT 1"

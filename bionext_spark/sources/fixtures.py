@@ -123,9 +123,9 @@ def write_fixture_tables(
     transcripts_rows: list[dict] | None = None,
     bucket_count: int = 32,
 ) -> dict[str, str]:
-    """Materialize fixtures as parquet; transcripts are bucketed by
-    hash(conv_id) via repartition (PipelineConfig.bucket_count) so
-    downstream per-conversation stages start co-located."""
+    """Materialize fixtures as parquet; transcripts are written as
+    at most ``bucket_count`` files hash-partitioned by conv_id, so each
+    conversation's turns sit in one file."""
     paths: dict[str, str] = {}
     os.makedirs(base_dir, exist_ok=True)
     for name, builder in FIXTURE_BUILDERS.items():

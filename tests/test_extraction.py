@@ -9,28 +9,25 @@ from bionext_spark import kernels as K
 from bionext_spark import oracle, synth
 from bionext_spark.adapters import StubEncoder, StubLexiconTagger
 from bionext_spark.operators.assemble import assemble_conversations
-from bionext_spark.operators.extraction import run_extractor
+from bionext_spark.operators.extraction import aggregate_triples, classify_pair_spans
 from bionext_spark.operators.linking import run_cleaner, run_linker
-from bionext_spark.operators.pairs import run_pair_generation
+from bionext_spark.operators.pairs import generate_pairs, pair_spans
 from bionext_spark.operators.tagging import run_tagger
 from bionext_spark.sources import fixtures
 
 
-@pytest.fixture(scope="module")
-def oracle_out(transcripts_rows):
+def _oracle(rows):
     lex = oracle.Lexicons(
         synth.lexicon_concepts_rows(),
         [{**r, "rank": i} for i, r in enumerate(synth.lexicon_genes_rows())],
         synth.train_direct_rows(),
         synth.lexicon_variants_rows(),
     )
-    return oracle.run_pipeline(
-        transcripts_rows, lex, K.build_tag_lexicon(synth.tag_lexicon_entries())
-    )
+    return oracle.run_pipeline(rows, lex, K.build_tag_lexicon(synth.tag_lexicon_entries()))
 
 
-@pytest.fixture(scope="module")
-def spark_stages(spark, transcripts):
+def _engine_stages(spark, transcripts):
+    """transcripts → (conversations, clean links, pair spans)."""
     convs = assemble_conversations(transcripts)
     mentions = run_tagger(convs, StubLexiconTagger(synth.tag_lexicon_entries()))
     links = run_linker(
@@ -43,15 +40,42 @@ def spark_stages(spark, transcripts):
         StubEncoder(),
     )
     cleaned = run_cleaner(links).cache()
-    pairs = run_pair_generation(cleaned, convs).cache()
-    return convs, cleaned, pairs
+    spans = pair_spans(generate_pairs(cleaned), cleaned).cache()
+    return convs, cleaned, spans
+
+
+def _triples(rows):
+    return sorted((t["conv_id"], t["subj"], t["pred"], t["obj"], t["novel"]) for t in rows)
+
+
+@pytest.fixture(scope="module")
+def oracle_out(transcripts_rows):
+    return _oracle(transcripts_rows)
+
+
+@pytest.fixture(scope="module")
+def spark_stages(spark, transcripts):
+    return _engine_stages(spark, transcripts)
 
 
 def test_pairs_match_oracle(spark_stages, oracle_out):
-    _, _, pairs = spark_stages
+    """pair_spans rows, marked with K.insert_markers over the conversation
+    doc, equal the oracle's marked pairs — composite-id entities and the
+    <= / < first-match tie rule included."""
+    convs, _, spans = spark_stages
+    docs = {r["conv_id"]: r["doc_text"] for r in convs.select("conv_id", "doc_text").collect()}
+    span_rows = spans.collect()
+
+    def marked(r):
+        return K.insert_markers(
+            docs[r["conv_id"]],
+            [(s["start"], s["end"]) for s in r["spans1"]],
+            [(s["start"], s["end"]) for s in r["spans2"]],
+        )
+
     got = sorted(
-        (r["conv_id"], r["e1_id"], r["e1_type"], r["e2_id"], r["e2_type"], r["marked_text"])
-        for r in pairs.collect()
+        (r["conv_id"], r["e1_id"], r["e1_type"], r["e2_id"], r["e2_type"], marked(r))
+        for r in span_rows
     )
     exp = sorted(
         (p["conv_id"], p["e1_id"], p["e1_type"], p["e2_id"], p["e2_type"], p["marked_text"])
@@ -59,67 +83,80 @@ def test_pairs_match_oracle(spark_stages, oracle_out):
     )
     assert len(exp) > 20
     assert got == exp
+    # the rule is actually exercised: some pair has spans on both sides,
+    # and some mention ties on first-part position for both entities of a
+    # pair (side 1 must win it)
+    assert any(r["spans1"] and r["spans2"] for r in span_rows)
+
+    def first_pos(linked_id, ent_id):
+        ent = set(ent_id.split(","))
+        return next((i for i, x in enumerate(linked_id.split(",")) if x in ent), None)
+
+    links = {}
+    for m in oracle_out["clean_links"]:
+        links.setdefault(m["conv_id"], []).append(m["linked_id"])
+    assert any(
+        first_pos(lid, p["e1_id"]) is not None
+        and first_pos(lid, p["e1_id"]) == first_pos(lid, p["e2_id"])
+        for p in oracle_out["pairs"]
+        for lid in links[p["conv_id"]]
+    )
 
 
 def test_triples_match_oracle(spark_stages, oracle_out):
-    _, _, pairs = spark_stages
-    got = sorted(
-        (r["conv_id"], r["subj"], r["pred"], r["obj"], r["novel"])
-        for r in run_extractor(pairs).collect()
-    )
-    exp = sorted(
-        (t["conv_id"], t["subj"], t["pred"], t["obj"], t["novel"])
-        for t in oracle_out["triples"]
-    )
+    """classify_pair_spans (cogrouped, doc shipped once per conversation)
+    + aggregate_triples equal the oracle's triples exactly."""
+    convs, _, spans = spark_stages
+    got = _triples(aggregate_triples(classify_pair_spans(spans, convs)).collect())
+    exp = _triples(oracle_out["triples"])
     assert len(exp) > 10
-    # composite ids actually exploded somewhere (J7)
     assert got == exp
 
 
 def test_fused_classify_equals_marked_path(spark_stages, oracle_out):
-    """classify_pair_spans (cogrouped, doc shipped once per conversation)
-    must equal classify_pairs(mark_pairs(...)) exactly."""
-    from bionext_spark.operators.extraction import aggregate_triples, classify_pair_spans
-    from bionext_spark.operators.pairs import generate_pairs, pair_spans
+    """Per chunk, before aggregation: classify_pair_spans (token splice over
+    the doc shipped once per conversation) yields exactly the classifier
+    outputs of the marked-text path — each oracle pair's marked_text
+    chunked by K.chunk_marked_text and scored by the stub classifier,
+    Negative_Class chunks included."""
+    from bionext_spark.config import DEFAULT_CONFIG
 
-    convs, cleaned, _ = spark_stages
-    spans = pair_spans(generate_pairs(cleaned), cleaned)
+    convs, _, spans = spark_stages
     got = sorted(
-        (r["conv_id"], r["subj"], r["pred"], r["obj"], r["novel"])
-        for r in aggregate_triples(classify_pair_spans(spans, convs)).collect()
+        (r["conv_id"], r["e1_id"], r["e2_id"], r["pred_class"],
+         tuple(r["rel_softmax"]), tuple(r["novel_raw"]))
+        for r in classify_pair_spans(spans, convs).collect()
     )
-    exp = sorted(
-        (t["conv_id"], t["subj"], t["pred"], t["obj"], t["novel"])
-        for t in oracle_out["triples"]
-    )
+    exp = []
+    for p in oracle_out["pairs"]:
+        for ch in K.chunk_marked_text(
+            p["marked_text"], DEFAULT_CONFIG.max_seq_len, p["e1_id"] != p["e2_id"]
+        ):
+            rel, nov = K.stub_relation_logits(p["e1_id"], p["e2_id"], ch)
+            exp.append((p["conv_id"], p["e1_id"], p["e2_id"], K.argmax_first(rel),
+                        tuple(K.softmax(rel)), tuple(nov)))
+    exp.sort()
+    assert len(exp) > 20
     assert got == exp
 
 
-def test_pair_spans_zip_equals_scan_oracle(spark_stages):
-    """The hash-indexed map_zip_with form of pair_spans must equal the
-    superseded per-mention list-scan form row-for-row (same pairs, same
-    ordered span lists on both sides), including composite-id entities
-    and the <= / < tie rule."""
-    from bionext_spark.operators.pairs import _pair_spans_scan, generate_pairs, pair_spans
+def test_marker_text_in_doc_matches_oracle(spark):
+    """A conversation whose text literally contains ``[s1]`` sends
+    classify_pair_spans down its string path (insert_markers +
+    chunk_marked_text instead of the token splice); triples still equal
+    the oracle's."""
+    base = synth.generate_transcripts(n_conversations=6, skew_conversation_turns=8)
+    conv = _oracle(base)["pairs"][0]["conv_id"]
+    rows = [dict(r) for r in base]
+    turn = next(r for r in rows if r["conv_id"] == conv)
+    turn["text"] += " see [s1] above"
+    exp = _oracle(rows)
+    assert any(p["conv_id"] == conv for p in exp["pairs"])
 
-    convs, cleaned, _ = spark_stages
-    pairs = generate_pairs(cleaned)
-
-    def rows(df):
-        return sorted(
-            (r["conv_id"], r["e1_id"], r["e1_type"], r["e2_id"], r["e2_type"],
-             tuple((s["start"], s["end"]) for s in r["spans1"]),
-             tuple((s["start"], s["end"]) for s in r["spans2"]))
-            for r in df.collect()
-        )
-
-    new = rows(pair_spans(pairs, cleaned))
-    old = rows(_pair_spans_scan(pairs, cleaned))
-    assert len(new) > 20
-    assert new == old
-    # at least one pair resolves a tie (side-1 wins) and one span list is
-    # non-empty on both sides — the rule is actually exercised
-    assert any(s1 and s2 for *_, s1, s2 in new)
+    convs, _, spans = _engine_stages(spark, fixtures.transcripts_df(spark, rows))
+    assert "[s1]" in convs.filter(convs.conv_id == conv).first()["doc_text"]
+    got = _triples(aggregate_triples(classify_pair_spans(spans, convs)).collect())
+    assert got == _triples(exp["triples"])
 
 
 def test_marker_insertion_kernel():
@@ -142,11 +179,8 @@ def test_classify_salting_invariance(spark_stages):
     import dataclasses
 
     from bionext_spark.config import DEFAULT_CONFIG
-    from bionext_spark.operators.extraction import classify_pair_spans
-    from bionext_spark.operators.pairs import generate_pairs, pair_spans
 
-    convs, cleaned, _ = spark_stages
-    spans = pair_spans(generate_pairs(cleaned), cleaned)
+    convs, _, spans = spark_stages
 
     def rows(cfg):
         return sorted(
@@ -172,14 +206,9 @@ def test_classify_weighted_bucketing_invariance(spark_stages):
     import dataclasses
 
     from bionext_spark.config import DEFAULT_CONFIG
-    from bionext_spark.operators.extraction import (
-        classify_pair_spans,
-        estimate_pair_weights,
-    )
-    from bionext_spark.operators.pairs import generate_pairs, pair_spans
+    from bionext_spark.operators.extraction import estimate_pair_weights
 
-    convs, cleaned, _ = spark_stages
-    spans = pair_spans(generate_pairs(cleaned), cleaned)
+    convs, cleaned, spans = spark_stages
 
     def rows(cfg, weighted):
         w = estimate_pair_weights(cleaned, convs, cfg) if weighted else None
@@ -278,7 +307,6 @@ def test_aggregate_triples_tie_semantics(spark):
     Also pins the two Negative_Class exits: pred_class==8 rows drop before
     aggregation, and groups whose summed argmax is 8 drop after."""
     from bionext_spark.config import NEGATIVE_CLASS, RELATION_LABELS
-    from bionext_spark.operators.extraction import aggregate_triples
 
     n_rel = len(RELATION_LABELS)
 

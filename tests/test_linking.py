@@ -59,29 +59,6 @@ def test_linker_matches_oracle(spark_links, oracle_out):
     assert got == exp
 
 
-def test_relational_vote_equals_grouped(spark, transcripts, spark_links):
-    """The single-shuffle grouped vote and the pure-relational vote must
-    produce identical links."""
-    from bionext_spark.operators.assemble import assemble_conversations
-    from bionext_spark.operators.tagging import run_tagger
-
-    convs = assemble_conversations(transcripts)
-    mentions = run_tagger(convs, StubLexiconTagger(synth.tag_lexicon_entries()))
-    rel = run_linker(
-        spark,
-        mentions,
-        fixtures.train_direct_df(spark),
-        fixtures.lexicon_concepts_df(spark),
-        fixtures.lexicon_genes_df(spark),
-        fixtures.lexicon_variants_df(spark),
-        StubEncoder(),
-        vote_impl="relational",
-    )
-    got = _norm(r.asDict() for r in rel.collect())
-    exp = _norm(r.asDict() for r in spark_links.collect())
-    assert got == exp
-
-
 def test_linker_covers_unlinked_and_default_taxon(oracle_out):
     links = oracle_out["links"]
     assert any(r["linked_id"] == "-" for r in links)  # cleaner has work

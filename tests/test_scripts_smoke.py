@@ -8,9 +8,9 @@ Two layers, both cheap:
   builds and the module-level code (sys.path bootstrap, imports) runs in
   a fresh interpreter, the way the driver/user actually invokes them.
 
-weak_parts.py and profile_weak.py are positional-argv (no argparse), so
-they only get the import-layer check; bench.py at the repo root is
-covered by tests/test_bench_accounting.py.
+profile_weak.py is positional-argv (no argparse), so it only gets the
+import-layer check; bench.py at the repo root is covered by
+tests/test_bench_accounting.py.
 """
 
 from __future__ import annotations
@@ -25,7 +25,7 @@ import pytest
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SCRIPTS = os.path.join(REPO, "scripts")
 ALL_PY = sorted(f for f in os.listdir(SCRIPTS) if f.endswith(".py"))
-ARGPARSE = [f for f in ALL_PY if f not in ("weak_parts.py", "profile_weak.py")]
+ARGPARSE = [f for f in ALL_PY if f != "profile_weak.py"]
 
 
 @pytest.mark.parametrize("name", ALL_PY)
